@@ -117,31 +117,37 @@ def _cpu_probe_s(iters: int = 20_000_000) -> float:
     return round(_t.perf_counter() - t0, 3)
 
 
-def _max_probe_gate() -> float:
+# the stored comparison snapshot (written by a clean run, read by the gate)
+_DETAIL_PATH = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
+)
+
+
+def _max_probe_gate(fresh_probe: float | None = None) -> float:
     """The probe gate threshold. SPARK_GRAFT_BENCH_MAX_PROBE_S overrides;
     otherwise 1.1 s (this box runs the loop in ~0.8 s at full clocks),
-    auto-raised to 1.4x the best probe recorded in the stored snapshot —
+    auto-raised to 1.4x the best probe on record — the minimum of the
+    stored snapshot's probes and ``fresh_probe``, one taken by this run —
     so on a slower machine the gate calibrates itself instead of parking
     every run in the 600 s quiet-wait and branding it contaminated
-    (ADVICE r13). The calibration can only RAISE the gate above 1.1,
-    never tighten it below the documented default."""
+    (ADVICE r13). The minimum keeps one slow stored snapshot from
+    raising the gate for every later run: a fast fresh probe pulls it
+    back down. The calibration never tightens the gate below 1.1."""
     env = os.environ.get("SPARK_GRAFT_BENCH_MAX_PROBE_S")
     if env:
         return float(env)
-    gate = 1.1
+    probes = [fresh_probe]
     try:
-        with open(os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-        )) as f:
-            stored = json.load(f)
-        probes = [
-            stored.get("load", {}).get("cpu_probe_s"),
-            stored.get("load", {}).get("quiet_wait", {}).get("probe_s"),
+        with open(_DETAIL_PATH) as f:
+            load = json.load(f).get("load", {})
+        probes += [
+            load.get("cpu_probe_s"),
+            load.get("quiet_wait", {}).get("probe_s"),
         ]
-        best = min(p for p in probes if p)
-        gate = max(gate, 1.4 * best)
-    except (OSError, ValueError, KeyError):
+    except (OSError, ValueError, AttributeError):
         pass
+    probes = [p for p in probes if p]
+    gate = max(1.1, 1.4 * min(probes)) if probes else 1.1
     return round(gate, 3)
 
 
@@ -188,11 +194,13 @@ def _wait_for_quiet(max_load: float, timeout_s: float) -> dict:
       loadavg clean both times; the probe is the only observable that
       catches it.
 
-    Returns {waited_s, timed_out, probe_s} for the hygiene record."""
-    max_probe = _max_probe_gate()
+    Returns {waited_s, timed_out, probe_s, max_probe_s} for the hygiene
+    record; max_probe_s is the gate, calibrated with this run's first
+    probe, that the end-of-run and mid-run probes are judged against."""
     t0 = time.time()
     timed_out = False
     probe = _cpu_probe_s()
+    max_probe = _max_probe_gate(probe)
     while os.getloadavg()[0] > max_load or probe > max_probe:
         if time.time() - t0 >= timeout_s:
             timed_out = True
@@ -205,6 +213,7 @@ def _wait_for_quiet(max_load: float, timeout_s: float) -> dict:
         "waited_s": round(time.time() - t0, 1),
         "timed_out": timed_out,
         "probe_s": probe,
+        "max_probe_s": max_probe,
     }
 
 
@@ -300,7 +309,7 @@ def main() -> None:
     }
     load_end = _machine_load()
     end_probe = _cpu_probe_s()
-    max_probe = _max_probe_gate()
+    max_probe = quiet_wait["max_probe_s"]
     # Contamination verdict — r13's gate only sampled host speed at
     # START and recorded a mid-run-hammered snapshot as clean. Now:
     # - start conditions as before (loadavg gate, quiet-wait timeout);

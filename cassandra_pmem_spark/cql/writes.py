@@ -32,7 +32,9 @@ expiry rides with each mutation's cells.
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -240,6 +242,22 @@ def _timeuuid_range_sides(col: str, v: Any):
     raise InvalidRequest(
         f"cannot range-compare {type(v).__name__} against timeuuid column {col!r}"
     )
+
+
+def _key_eq(cols, vals):
+    """col_1 = val_1 AND ... — one buffered statement's key match."""
+    return reduce(
+        operator.and_, (F.col(c) == F.lit(v) for c, v in zip(cols, vals))
+    )
+
+
+def _newest(preds, base=None):
+    """The newest timestamp among the (cond, writetime) deletes whose
+    cond holds on the row, and `base` (a Column) when given; NULL when
+    no delete applies."""
+    ts = [F.when(cond, F.lit(wt).cast("long")) for cond, wt in preds]
+    ts += [base] if base is not None else []
+    return ts[0] if len(ts) == 1 else F.greatest(*ts)
 
 
 def _plain_value(v: Any) -> Any:
@@ -770,9 +788,10 @@ class CqlWriteSession:
     """Mutable table state driven by CQL write statements.
 
     `table(now)` materializes the visible state, applying in order:
-    cell-level LWW merge → counter folding → cell tombstones → row
-    tombstones → TTL expiry. `now` (same unit as writetime) is injectable
-    for deterministic TTL tests (TTLTest.java style)."""
+    TTL expiry → cell-level LWW merge → counter folding → row, range and
+    cell tombstones (folded to the newest covering delete per cell).
+    `now` (same unit as writetime) is injectable for deterministic TTL
+    tests (TTLTest.java style)."""
 
     def __init__(
         self,
@@ -1753,9 +1772,7 @@ class CqlWriteSession:
         reference's nowInSec read (StorageProxy.cas reads at the
         request's nowInSeconds; an expired cell never satisfies IF)."""
         current = self.table(now=self._clock_ref[0])
-        flt = F.lit(True)
-        for kc, kv in zip(self.meta.primary_key, key):
-            flt = flt & (F.col(kc) == F.lit(kv))
+        flt = _key_eq(self.meta.primary_key, key)
         # NO .limit(1): the full-pk filter already yields <=1 row, and a
         # LIMIT above this shuffle plan would run CollectLimit's
         # incremental multi-job execution (measured 537ms vs 78ms for
@@ -1777,9 +1794,7 @@ class CqlWriteSession:
         df = self.table(
             now=self._clock_ref[0], with_shadows=True, force_elem={col}
         )
-        flt = F.lit(True)
-        for kc, kv in zip(self.meta.primary_key, key):
-            flt = flt & (F.col(kc) == F.lit(kv))
+        flt = _key_eq(self.meta.primary_key, key)
         # no .limit(1) — full-pk filter yields <=1 row; see
         # _read_visible_rows on CollectLimit's multi-job cost
         rows = df.filter(flt).collect()
@@ -2318,57 +2333,44 @@ class CqlWriteSession:
                 ),
             )
 
-        # counter folding (CounterMutation.java:49): deltas replayed on top
+        # counter folding (CounterMutation.java:49): every buffered delta
+        # adds on top of the merged value — one sum per counter column,
+        # accumulated left to right in the column's own type (bigint)
+        deltas: dict[str, list] = {}
         for m in self._mutations:
             for col, d in m.counter_deltas.items():
-                cond = F.lit(True)
-                for kc, kv in zip(key_cols, m.key):
-                    cond = cond & (F.col(kc) == F.lit(kv))
-                merged = merged.withColumn(
-                    col,
-                    F.when(cond, F.coalesce(F.col(col), F.lit(0)) + F.lit(d)).otherwise(
-                        F.col(col)
+                deltas.setdefault(col, []).append((_key_eq(key_cols, m.key), d))
+        if deltas:
+            merged = merged.withColumns({
+                col: F.when(
+                    reduce(operator.or_, [c for c, _d in ds]),
+                    reduce(
+                        operator.add,
+                        [F.when(c, F.lit(d)).otherwise(F.lit(0)) for c, d in ds],
+                        F.coalesce(F.col(col), F.lit(0)),
                     ),
-                )
+                ).otherwise(F.col(col))
+                for col, ds in deltas.items()
+            })
 
-        # cell tombstones: null out cells whose surviving writetime <= delete ts
-        # (their liveness shadows go with them — a deleted cell has no
-        # writetime/ttl to SELECT). For per-cell map columns the shadow is
-        # cell-granular: only entries written at or before the delete die.
-        for ct in self._cell_tombs:
-            cond = F.lit(True)
-            for kc, kv in zip(key_cols, ct.key):
-                cond = cond & (F.col(kc) == F.lit(kv))
-            for col in ct.columns:
-                if col in elem_cols:
-                    merged = self._shadow_elem_cells(merged, col, cond, ct.writetime)
-                    continue
-                dead = cond & (
-                    F.col(f"_writetime_{col}").isNull()
-                    | (F.col(f"_writetime_{col}") <= F.lit(ct.writetime))
-                )
-                merged = merged.withColumn(
-                    col, F.when(dead, F.lit(None)).otherwise(F.col(col))
-                )
-                for sh in (f"_writetime_{col}", f"_expiry_{col}"):
-                    merged = merged.withColumn(
-                        sh, F.when(dead, F.lit(None)).otherwise(F.col(sh))
-                    )
-
-        # row + range tombstones (db/DeletionTime.java, RangeTombstone.java):
-        # a delete at t shadows every matching cell with writetime <= t — so
-        # delete-then-reinsert keeps only the newer cells. Rows whose cells
-        # are all shadowed disappear.
-        shadow_preds = []
-        for rt in self._row_tombs:
-            cond = F.lit(True)
-            for kc, kv in zip(key_cols, rt.key):
-                cond = cond & (F.col(kc) == F.lit(kv))
-            shadow_preds.append((cond, rt.writetime))
+        # Tombstones (db/DeletionTime.java, RangeTombstone.java): a delete
+        # at t shadows every covered cell with writetime <= t, so
+        # delete-then-reinsert keeps only the newer cells; rows whose
+        # cells are all shadowed disappear. Shadowing does not depend on
+        # the order the deletes were issued: a cell dies iff the NEWEST
+        # delete covering it has t >= its writetime. So the deletes fold
+        # into one newest-covering-delete column per cell — __tomb_row
+        # over the row and range tombstones (the row-liveness shadow) and
+        # __tomb_{col} over those plus the cell tombstones naming col —
+        # and one projection applies them: the plan grows linearly with
+        # the number of deletes, not per delete on top of the last. A dead
+        # cell takes its writetime/expiry shadows with it; collection
+        # columns die cell by cell (_shadow_elem_cells).
+        shadow_preds = [
+            (_key_eq(key_cols, rt.key), rt.writetime) for rt in self._row_tombs
+        ]
         for rg in self._range_tombs:
-            cond = F.lit(True)
-            for kc, kv in rg.eq.items():
-                cond = cond & (F.col(kc) == F.lit(kv))
+            cond = _key_eq(rg.eq.keys(), rg.eq.values())
             for col, (lo, hi) in rg.ranges.items():
                 for bound, is_lo in ((lo, True), (hi, False)):
                     if bound is None:
@@ -2411,41 +2413,39 @@ class CqlWriteSession:
                     else:
                         cond = cond & ((lhs <= rv) if incl else (lhs < rv))
             shadow_preds.append((cond, rg.writetime))
-        if shadow_preds:
-            any_key_cond = F.lit(False)
-            for cond, wt in shadow_preds:
-                any_key_cond = any_key_cond | cond
-                merged = merged.withColumn(
-                    "__rlwt",
-                    F.when(
-                        cond & (F.col("__rlwt") <= F.lit(wt)), F.lit(None)
-                    ).otherwise(F.col("__rlwt")),
-                )
-                for col in elem_cols:
-                    merged = self._shadow_elem_cells(merged, col, cond, wt)
-                for col in scalar_cols:
-                    # Materialize deadness FIRST: the chained withColumns
-                    # below mutate columns that `dead` references, and a
-                    # lazily-bound expression would re-evaluate against
-                    # the already-nulled column (wrong answer).
-                    merged = merged.withColumn(
-                        f"__dead_{col}",
-                        cond
-                        & (
-                            F.col(f"_writetime_{col}").isNull()
-                            | (F.col(f"_writetime_{col}") <= F.lit(wt))
-                        ),
-                    )
-                    dead = F.col(f"__dead_{col}")
-                    merged = merged.withColumn(
-                        col, F.when(dead, F.lit(None)).otherwise(F.col(col))
-                    ).withColumn(
-                        f"_writetime_{col}",
-                        F.when(dead, F.lit(None)).otherwise(F.col(f"_writetime_{col}")),
-                    ).withColumn(
-                        f"_expiry_{col}",
-                        F.when(dead, F.lit(None)).otherwise(F.col(f"_expiry_{col}")),
-                    ).drop(f"__dead_{col}")
+        cell_preds: dict[str, list] = {}
+        for ct in self._cell_tombs:
+            cond = _key_eq(key_cols, ct.key)
+            for col in ct.columns:
+                cell_preds.setdefault(col, []).append((cond, ct.writetime))
+        tombed = [
+            c for c in elem_cols + scalar_cols if shadow_preds or c in cell_preds
+        ]
+        if tombed:
+            row_t = None
+            if shadow_preds:
+                merged = merged.withColumn("__tomb_row", _newest(shadow_preds))
+                row_t = F.col("__tomb_row")
+            merged = merged.withColumns({
+                f"__tomb_{c}": _newest(cell_preds.get(c, []), row_t) for c in tombed
+            })
+            out = {}
+            if shadow_preds:
+                out["__rlwt"] = F.when(
+                    F.col("__rlwt") <= row_t, F.lit(None)
+                ).otherwise(F.col("__rlwt"))
+            for col in tombed:
+                t = F.col(f"__tomb_{col}")
+                if col in elem_cols:
+                    out.update(self._shadow_elem_cells(col, t))
+                    continue
+                wt = F.col(f"_writetime_{col}")
+                dead = t.isNotNull() & (wt.isNull() | (wt <= t))
+                for c in (col, f"_writetime_{col}", f"_expiry_{col}"):
+                    out[c] = F.when(dead, F.lit(None)).otherwise(F.col(c))
+            merged = merged.withColumns(out).drop(
+                "__tomb_row", *[f"__tomb_{c}" for c in tombed]
+            )
         # non-frozen empty collections are a COMPLEX DELETION, not a
         # value: writing {} / [] stores no cells, so the column is dead —
         # value NULL and no liveness (WRITETIME must be NULL, and an
@@ -2462,24 +2462,14 @@ class CqlWriteSession:
                 continue
             if col in elem_cols:
                 continue  # per-cell path already stores no cells for {}
-            sz = F.size(
+            dead = F.size(
                 F.map_keys(F.col(col)) if isinstance(dt, T.MapType) else F.col(col)
-            )
-            # `sz == 0` references `col`, which the first withColumn
-            # nulls; materialize deadness in a temp column so the shadow
-            # columns see the PRE-mutation value (a lazily-bound `dead`
-            # would re-evaluate size(NULL) and never clear the shadows).
-            merged = merged.withColumn(f"__dead_{col}", sz == 0)
-            dead = F.col(f"__dead_{col}")
-            merged = merged.withColumn(
-                col, F.when(dead, F.lit(None)).otherwise(F.col(col))
-            ).withColumn(
-                f"_writetime_{col}",
-                F.when(dead, F.lit(None)).otherwise(F.col(f"_writetime_{col}")),
-            ).withColumn(
-                f"_expiry_{col}",
-                F.when(dead, F.lit(None)).otherwise(F.col(f"_expiry_{col}")),
-            ).drop(f"__dead_{col}")
+            ) == 0
+            # one projection: every shadow sees the PRE-mutation value
+            merged = merged.withColumns({
+                c: F.when(dead, F.lit(None)).otherwise(F.col(c))
+                for c in (col, f"_writetime_{col}", f"_expiry_{col}")
+            })
 
         # reassemble non-frozen UDT structs from their surviving field
         # cells; the column is NULL iff no field cell is live (a UDT with
@@ -2649,58 +2639,47 @@ class CqlWriteSession:
             F.map_from_entries(ent(F.col("__c.exp"))).alias(f"_cellexp_{col}"),
         )
 
-    def _shadow_elem_cells(self, merged, col, cond, wt):
-        """Tombstone shadowing at cell granularity: under `cond`, drop
-        every cell whose own writetime <= the delete timestamp, then
-        recompute the column-level liveness from the survivors. The
-        value rewrite follows the collection shape — map entries by key,
-        set elements by themselves, list values by their position in the
-        key-sorted cell order."""
+    def _shadow_elem_cells(self, col: str, t) -> dict:
+        """Tombstone shadowing at cell granularity, as the replacement
+        columns of one projection: where the newest covering delete `t`
+        (a long Column, NULL = no delete) exists, drop every cell whose
+        own writetime <= t, and recompute the column-level liveness from
+        the survivors. The value rewrite follows the collection shape —
+        map entries by key, set elements by themselves, list values by
+        their position in the key-sorted cell order."""
         kind = self._collection_kind_of(col)
         cwt = F.col(f"_cellwt_{col}")
-        survivors = F.map_filter(cwt, lambda _k, w: w > F.lit(wt))
+        cexp = F.col(f"_cellexp_{col}")
+        cond = t.isNotNull()
+        survivors = F.map_filter(cwt, lambda _k, w: w > t)
         if kind == "map":
-            new_val = F.map_filter(
-                F.col(col), lambda k, _v: cwt[k] > F.lit(wt)
-            )
+            new_val = F.map_filter(F.col(col), lambda k, _v: cwt[k] > t)
         elif kind == "set":
-            new_val = F.filter(F.col(col), lambda x: cwt[x] > F.lit(wt))
+            new_val = F.filter(F.col(col), lambda x: cwt[x] > t)
         else:
             # i-th list value ↔ i-th key-sorted cell: zip, filter, project
             ks = F.array_sort(F.map_keys(cwt))
             new_val = F.transform(
                 F.filter(
                     F.arrays_zip(ks.alias("k"), F.col(col).alias("v")),
-                    lambda e: cwt[e["k"]] > F.lit(wt),
+                    lambda e: cwt[e["k"]] > t,
                 ),
                 lambda e: e["v"],
             )
-        keep = lambda m: F.map_filter(  # noqa: E731
-            m, lambda k, _v: cwt[k] > F.lit(wt)
-        )
-        merged = (
-            merged.withColumn(
-                col, F.when(cond, new_val).otherwise(F.col(col))
-            )
-            .withColumn(
-                f"_cellexp_{col}",
-                F.when(cond, keep(F.col(f"_cellexp_{col}"))).otherwise(
-                    F.col(f"_cellexp_{col}")
-                ),
-            )
-            .withColumn(
-                f"_cellwt_{col}",
-                F.when(cond, survivors).otherwise(F.col(f"_cellwt_{col}")),
-            )
-        )
-        alive = F.size(F.map_values(F.col(f"_cellwt_{col}"))) > 0
-        return merged.withColumn(
-            f"_writetime_{col}",
-            F.when(alive, F.array_max(F.map_values(F.col(f"_cellwt_{col}")))),
-        ).withColumn(
-            f"_expiry_{col}",
-            F.when(alive, F.array_max(F.map_values(F.col(f"_cellexp_{col}")))),
-        )
+        new_exp = F.map_filter(cexp, lambda k, _v: cwt[k] > t)
+        # a fully shadowed column stores no cells: its value is NULL, not
+        # empty, and array_max of no survivors nulls its liveness too
+        return {
+            col: F.when(~cond, F.col(col)).when(F.size(survivors) > 0, new_val),
+            f"_cellexp_{col}": F.when(cond, new_exp).otherwise(cexp),
+            f"_cellwt_{col}": F.when(cond, survivors).otherwise(cwt),
+            f"_writetime_{col}": F.when(
+                cond, F.array_max(F.map_values(survivors))
+            ).otherwise(F.col(f"_writetime_{col}")),
+            f"_expiry_{col}": F.when(
+                cond, F.array_max(F.map_values(new_exp))
+            ).otherwise(F.col(f"_expiry_{col}")),
+        }
 
 
 def validate_batch_pieces(

@@ -18,6 +18,8 @@ import tempfile
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cassandra_pmem_spark.session import env_flag
+
 # Hint only below this planner-estimated size. Larger than the default
 # spark.sql.autoBroadcastJoinThreshold (10 MB) because the planner's
 # estimate for a filtered parquet scan is the full file size (filter
@@ -93,7 +95,7 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     executor loss at the cost of a write to reliable storage. Same
     rows, same plans above the checkpoint boundary — an availability
     trade only (SCALE.md §r14)."""
-    if os.environ.get("SPARK_GRAFT_RELIABLE_CHECKPOINT"):
+    if env_flag("SPARK_GRAFT_RELIABLE_CHECKPOINT"):
         sc = df.sparkSession.sparkContext
         if sc._jsc.sc().getCheckpointDir().isEmpty():
             sc.setCheckpointDir(

@@ -14,6 +14,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def env_flag(name: str) -> bool:
+    """A boolean env lever: on only for 1/true/yes (any case); unset,
+    empty, 0, false or anything else means off."""
+    return os.environ.get(name, "").strip().lower() in ("1", "true", "yes")
+
+
 def _cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -62,6 +68,6 @@ def get_spark(app_name: str = "cassandra-pmem-spark", shuffle_partitions: int | 
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
     )
-    if not os.environ.get("SPARK_GRAFT_NO_MASTER"):
+    if not env_flag("SPARK_GRAFT_NO_MASTER"):
         builder = builder.master(f"local[{cpus}]")
     return builder.getOrCreate()

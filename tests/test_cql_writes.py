@@ -84,6 +84,22 @@ class TestCounters:
         sess.execute("UPDATE kv SET n = n - 2 WHERE k = 1 AND c = 1")
         assert rows(sess.table(), "k", "c", "n") == [(1, 1, 6)]
 
+    def test_many_keys_and_wide_deltas(self, sess):
+        # one sum per counter column: every key gets only its own deltas,
+        # and the running sum is a bigint (two 2e9 deltas overflow int)
+        for i in range(12):
+            sess.execute(f"UPDATE kv SET n = n + {i} WHERE k = 1 AND c = {i % 3}")
+        sess.execute("INSERT INTO kv (k, c, a) VALUES (2, 0, 'untouched')")
+        for _ in range(2):
+            sess.execute("UPDATE kv SET n = n + 2000000000 WHERE k = 3 AND c = 0")
+        assert rows(sess.table(), "k", "c", "n") == [
+            (1, 0, 0 + 3 + 6 + 9),
+            (1, 1, 1 + 4 + 7 + 10),
+            (1, 2, 2 + 5 + 8 + 11),
+            (2, 0, None),
+            (3, 0, 4_000_000_000),
+        ]
+
 
 class TestDelete:
     def test_row_delete(self, sess):
@@ -1500,3 +1516,97 @@ class TestVisibleFrameCacheInvalidation:
                 assert sorted(paged) == direct
         # final read after the whole interleaving
         read("SELECT k, c, v FROM t")
+
+
+class TestTombstoneFold:
+    """Buffered row, range and cell tombstones fold into one
+    newest-covering-delete column per cell (a cell dies iff the newest
+    delete covering it is at or after its writetime), so the merge plan
+    grows linearly with the number of deletes and the result does not
+    depend on the order the deletes were issued."""
+
+    @pytest.mark.parametrize(
+        "stmt",
+        [
+            "DELETE FROM kv WHERE k = 1 AND c = {i}",
+            "DELETE a FROM kv WHERE k = 1 AND c = {i}",
+        ],
+        ids=["row", "cell"],
+    )
+    def test_plan_grows_linearly_with_deletes(self, spark, stmt):
+        def table(n):
+            sess = CqlWriteSession(spark, META)
+            for i in range(20):
+                sess.execute(f"INSERT INTO kv (k, c, a, b) VALUES (1, {i}, 'a', 'b')")
+            for i in range(n):
+                sess.execute(stmt.format(i=i))
+            return sess.table(with_shadows=True)
+
+        def plan_chars(df):
+            return len(df._jdf.queryExecution().optimizedPlan().toString())
+
+        t16 = table(16)
+        assert plan_chars(t16) < 4 * plan_chars(table(4))
+        if stmt.startswith("DELETE FROM"):
+            assert rows(t16, "c") == [(c,) for c in range(16, 20)]
+        else:
+            assert rows(t16.filter("a IS NULL"), "c") == [(c,) for c in range(16)]
+
+    @pytest.fixture()
+    def db(self, spark):
+        from cassandra_pmem_spark.cql.ddl import CqlDatabase
+
+        db = CqlDatabase(spark)
+        db.execute("CREATE KEYSPACE tf WITH REPLICATION = {'class': 'SimpleStrategy'}")
+        db.execute("USE tf")
+        db.execute("CREATE TYPE addr (street text, city text)")
+        db.execute(
+            "CREATE TABLE t (k int PRIMARY KEY, s text, m map<text, int>, "
+            "l list<int>, u addr)"
+        )
+        return db
+
+    @pytest.mark.parametrize("newer_first", [True, False], ids=["newer", "older"])
+    def test_shadowing_is_order_independent(self, db, newer_first):
+        # the scalar s, the map m, the list l and the UDT field u.city are
+        # each covered by a cell delete and a row delete, one older and
+        # one newer than the cell; u.street only by the row delete
+        def issue(*deletes):
+            for d in deletes if newer_first else deletes[::-1]:
+                db.execute(d)
+
+        def state():
+            return [
+                (r.k, r.s, r.w, r.m, r.l, r.u and tuple(r.u))
+                for r in db.execute(
+                    "SELECT k, s, WRITETIME(s) AS w, m, l, u FROM t"
+                ).collect()
+            ]
+
+        cells = "s, m, l, u.city"
+        db.execute(
+            "INSERT INTO t (k, s, m, l, u) VALUES (1, 'x', {'a': 1}, [7], "
+            "{street: 'Main', city: 'Rome'}) USING TIMESTAMP 20"
+        )
+        issue(
+            f"DELETE {cells} FROM t USING TIMESTAMP 30 WHERE k = 1",
+            "DELETE FROM t USING TIMESTAMP 10 WHERE k = 1",
+        )
+        assert state() == [(1, None, None, None, None, ("Main", None))]
+
+        db.execute(
+            "INSERT INTO t (k, s, m, l, u) VALUES (1, 'y', {'b': 2}, [8], "
+            "{street: 'Elm', city: 'Oslo'}) USING TIMESTAMP 40"
+        )
+        assert state() == [(1, "y", 40, {"b": 2}, [8], ("Elm", "Oslo"))]
+
+        issue(
+            "DELETE FROM t USING TIMESTAMP 50 WHERE k = 1",
+            f"DELETE {cells} FROM t USING TIMESTAMP 35 WHERE k = 1",
+        )
+        assert state() == []
+        # an update older than the row delete stays shadowed, a newer
+        # one brings back only its own cells
+        db.execute("UPDATE t USING TIMESTAMP 45 SET s = 'old' WHERE k = 1")
+        db.execute("UPDATE t USING TIMESTAMP 60 SET m['c'] = 3 WHERE k = 1")
+        assert state() == [(1, None, None, {"c": 3}, None, None)]

@@ -102,6 +102,8 @@ class TestMurmur3Token:
             )
 
         assert "EvalPython" in plan_of()  # default: Arrow kernel
+        monkeypatch.setenv("SPARK_GRAFT_NATIVE_TOKEN", "0")
+        assert "EvalPython" in plan_of()  # =0 means off, like unset
         monkeypatch.setenv("SPARK_GRAFT_NATIVE_TOKEN", "1")
         assert "EvalPython" not in plan_of()  # lever engaged: native
         spark.conf.set("spark.sql.ansi.enabled", "true")

@@ -68,6 +68,41 @@ class TestMaterialize:
         assert not ckdir.isEmpty() and str(tmp_path / "ck") in ckdir.get()
 
 
+    @pytest.mark.parametrize("value", [None, "0"])
+    def test_reliable_checkpoint_off_unless_truthy(
+        self, spark, monkeypatch, value
+    ):
+        # `=0` must mean off: only 1/true/yes engage the reliable path
+        from pyspark.sql import DataFrame
+
+        from cassandra_pmem_spark.plans.hints import materialize
+
+        if value is None:
+            monkeypatch.delenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", raising=False)
+        else:
+            monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", value)
+
+        def _reliable(*_a, **_k):
+            raise AssertionError("reliable checkpoint path taken")
+
+        monkeypatch.setattr(DataFrame, "checkpoint", _reliable)
+        out = materialize(spark.range(5).selectExpr("id AS v"))
+        assert sorted(r.v for r in out.collect()) == list(range(5))
+
+
+def test_env_flag_parsing(monkeypatch):
+    from cassandra_pmem_spark.session import env_flag
+
+    for on in ("1", "true", "TRUE", "yes", " Yes "):
+        monkeypatch.setenv("SPARK_GRAFT_TEST_FLAG", on)
+        assert env_flag("SPARK_GRAFT_TEST_FLAG"), on
+    for off in ("0", "false", "no", "off", "", "2"):
+        monkeypatch.setenv("SPARK_GRAFT_TEST_FLAG", off)
+        assert not env_flag("SPARK_GRAFT_TEST_FLAG"), off
+    monkeypatch.delenv("SPARK_GRAFT_TEST_FLAG")
+    assert not env_flag("SPARK_GRAFT_TEST_FLAG")
+
+
 class TestPushdownAndBroadcast:
     def test_filter_reaches_parquet_scan(self, spark):
         df = (
