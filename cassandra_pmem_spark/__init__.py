@@ -17,32 +17,25 @@ pyspark.sql.functions (JVM/codegen path) unless semantics genuinely require
 an Arrow-batched pandas UDF.
 """
 
-from cassandra_pmem_spark.catalog import TABLE_NAMES, load_table, load_tables
-from cassandra_pmem_spark.session import get_spark
+import importlib
 
-__all__ = [
-    "get_spark",
-    "load_table",
-    "load_tables",
-    "TABLE_NAMES",
-    "cql_table",
-    "execute_cql",
-    "CqlWriteSession",
-]
+# public name -> defining submodule, imported on first access: package load
+# imports no pyspark, so the worker daemon (worker_daemon.py) still
+# chooses where pyspark is imported from
+_LAZY = {
+    "get_spark": "session",
+    "load_table": "catalog",
+    "load_tables": "catalog",
+    "TABLE_NAMES": "catalog",
+    "cql_table": "cql.table",
+    "execute_cql": "cql.parser",
+    "CqlWriteSession": "cql.writes",
+}
+__all__ = list(_LAZY)
 __version__ = "0.1.0"
 
 
-def __getattr__(name):  # lazy: avoid importing the full surface at package load
-    if name == "cql_table":
-        from cassandra_pmem_spark.cql.table import cql_table
-
-        return cql_table
-    if name == "execute_cql":
-        from cassandra_pmem_spark.cql.parser import execute_cql
-
-        return execute_cql
-    if name == "CqlWriteSession":
-        from cassandra_pmem_spark.cql.writes import CqlWriteSession
-
-        return CqlWriteSession
-    raise AttributeError(name)
+def __getattr__(name):
+    if name not in _LAZY:
+        raise AttributeError(name)
+    return getattr(importlib.import_module(f"{__name__}.{_LAZY[name]}"), name)

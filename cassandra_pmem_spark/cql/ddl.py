@@ -2178,12 +2178,16 @@ class CqlDatabase:
         # would. Parquet-backed tables are NOT persisted (their visible
         # state is unbounded; the scan stays the source of truth).
         self._select_frames: dict[tuple, tuple] = {}
+        # the pagers' compiled page frames, keyed by statement repr
+        # (cql/pager.py QueryPager._page_frame)
+        self._pager_frames: dict[str, tuple] = {}
         # unpin everything when this database is collected — otherwise a
         # long Spark session accumulates persisted frames from
         # short-lived CqlDatabase instances (one per registry query)
         import weakref
 
         weakref.finalize(self, _unpersist_frames, self._select_frames)
+        weakref.finalize(self, _unpersist_frames, self._pager_frames)
         self.last_index_choice: tuple | None = None
         self.current_keyspace: str | None = None
         # ONE coordinator timeline shared by every table session: a write

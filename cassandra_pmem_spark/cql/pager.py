@@ -65,8 +65,7 @@ _HIDDEN = "__pg"
 
 
 def _unpersist_quietly(df) -> None:
-    """weakref.finalize target: unpin a pager's compiled frame when the
-    pager is collected (module-level — holds no pager reference)."""
+    """Unpin a memoized page frame (a no-op for an unpersisted one)."""
     try:
         df.unpersist(blocking=False)
     except Exception:
@@ -374,9 +373,7 @@ class QueryPager:
         # re-compiling it — same provable-identity argument, the version
         # key covers everything the compile reads.
         ver = self.db._visible_version(self._st.table)
-        cache = getattr(self.db, "_pager_frames", None)
-        if cache is None:
-            cache = self.db._pager_frames = {}
+        cache = self.db._pager_frames
         skey = repr(self._st)
         cached = cache.get(skey)
         if ver is not None and cached is not None and cached[0] == ver:
@@ -385,11 +382,14 @@ class QueryPager:
         if self.kind != "global" and self._pk_n:
             frame = frame.withColumn(self._tok_name, self._token_expr())
         if ver is not None:
-            if cached is not None:
-                try:
-                    cached[1].unpersist(blocking=False)
-                except Exception:
-                    pass
+            # a version tick makes EVERY memoized frame of this table
+            # stale, not only this statement's: evict them all. ver[0]
+            # is the table's write-session identity, so an entry with
+            # the same identity and another version is stale
+            for k, (v, f) in list(cache.items()):
+                if k == skey or (v[0] == ver[0] and v != ver):
+                    _unpersist_quietly(f)
+                    del cache[k]
             # pin the compiled frame too: pages share the token/order
             # expressions — persisting above them means page N's job
             # reads the already-hashed rows instead of re-computing per
@@ -399,9 +399,6 @@ class QueryPager:
             # (plan reuse without persist is still safe there)
             if self.db._buffer_backed(self._st.table):
                 frame = frame.persist()
-                import weakref
-
-                weakref.finalize(self.db, _unpersist_quietly, frame)
             cache[skey] = (ver, frame)
         return frame
 

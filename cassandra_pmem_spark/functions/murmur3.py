@@ -173,20 +173,21 @@ def murmur3_token_column(col):
     """Column expression form: Cassandra Murmur3 token of a bigint column
     (non-null, as partition keys are). Usable in filters and projections.
 
-    Backend dispatch, measured not guessed (r14): the native expression
-    removes the JVM→Python boundary (~2 µs/row of Arrow transfer +
-    batch dispatch) but costs a FIXED ~0.5-1 s of driver work per query
-    invocation — Catalyst re-walks the ~2k-node hash tree every
-    optimizer pass, and every sink re-plans (measured: shallow token
-    query 0.1 s plan/0.4 s total with the kernel vs 0.4-0.7 s plan/
-    0.9-1.1 s total native at sf0.1; the bulk-write shape 0.25 s vs
-    0.4-1.0 s). The crossover is ~0.5-1M rows per token evaluation:
-    below it the Arrow kernel wins, above it the native form saves
-    minutes per pass (10^9 rows ≈ 30+ min of boundary vs ~1 s of plan
-    tax). Local/bench scale sits under the crossover, so the kernel is
-    the default; set SPARK_GRAFT_NATIVE_TOKEN=1 on cluster deployments
+    Backend dispatch is a fixed-vs-per-row trade. The native expression
+    removes the JVM→Python boundary but costs a FIXED ~0.4-1 s of driver
+    work per query invocation — Catalyst re-walks the ~2k-node hash tree
+    every optimizer pass, and every sink re-plans. The Arrow kernel pays
+    per row, plus the fixed cost of a Python task, which fell by ~0.2 s
+    once workers stopped importing pyspark from Spark's archives
+    (worker_daemon.py). Measured on 4 cores, token + sum over a cached
+    4-partition range, best of 3: kernel 0.19 / 0.29 / 0.67 s at 0.1M /
+    1M / 4M rows, native 0.43-0.47 s flat, so the crossover on this
+    shape is ~2M rows per token evaluation. Local/bench scale sits under
+    it, so the kernel is the default; set SPARK_GRAFT_NATIVE_TOKEN=1 on
+    cluster deployments
     (requires the engine's ANSI-off posture — enforced here, falling
-    back to the kernel on ANSI sessions)."""
+    back to the kernel on ANSI sessions). SCALE.md, "Python worker
+    fixed cost", has the figures."""
     if env_flag("SPARK_GRAFT_NATIVE_TOKEN") and _ansi_off():
         return murmur3_token_column_native(col)
     c = F.col(col) if isinstance(col, str) else col

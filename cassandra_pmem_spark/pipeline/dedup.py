@@ -138,12 +138,6 @@ def simhash32_md5(col: Column | str) -> Column:
     return _simhash(col, 32, md5_hash32)
 
 
-def with_minhash(
-    df: DataFrame, text_col: str = "text", num_hashes: int = 32, shingle: int = 3
-) -> DataFrame:
-    return df.withColumn("minhash", minhash_signature(word_shingles(text_col, shingle), num_hashes))
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -496,7 +490,7 @@ def connected_components(
 
     Returns (id_col, component) with component = min reachable id.
     """
-    from cassandra_pmem_spark.plans.hints import materialize
+    from cassandra_pmem_spark.plans.hints import materialize, release_checkpointed
 
     # materialize the (possibly expensive — LSH + verify) edge frame ONCE;
     # the loop re-reads it every round
@@ -577,6 +571,7 @@ def connected_components(
         labels = nxt
         if unchanged:
             break
+    release_checkpointed()
     return labels.select(F.col("id").alias(id_col), "comp")
 
 
@@ -605,7 +600,7 @@ def connected_components_star(
     generations). At convergence the edges form a star forest: every
     node points at its component min. Same return shape:
     (id_col, component)."""
-    from cassandra_pmem_spark.plans.hints import materialize
+    from cassandra_pmem_spark.plans.hints import materialize, release_checkpointed
 
     # canonical orientation u > v, no self-loops, deduped
     e = materialize(
@@ -696,6 +691,7 @@ def connected_components_star(
         e, prev_sig = nxt, sig
         if unchanged:
             break
+    release_checkpointed()
     # star forest: (u, v) = (member, root); roots + isolated vertices
     # label themselves. groupBy-min guards the (converged) uniqueness.
     member = e.groupBy("u").agg(F.min("v").alias("comp")).select(

@@ -108,13 +108,34 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
         # the reliable-checkpoint file write runs as a follow-up job that
         # would otherwise RECOMPUTE the frame from lineage — persisting
         # makes it a cache read. The blocks are dropped once the
-        # checkpoint files are the source of truth.
+        # checkpoint files are the source of truth: now when eager, else
+        # by release_checkpointed() after the frame's first action.
+        release_checkpointed()
         df = df.persist()
         out = df.checkpoint(eager=eager)
         if eager:
             df.unpersist(blocking=False)
+        else:
+            _LAZY_PERSISTED.append((out._jdf.queryExecution().logical().rdd(), df))
         return out
     return df.localCheckpoint(eager=eager)
+
+
+# (checkpointed JVM RDD, persisted source frame) of every lazy reliable
+# checkpoint whose files may not be written yet
+_LAZY_PERSISTED: list = []
+
+
+def release_checkpointed() -> None:
+    """Unpersist the source blocks of every lazy reliable checkpoint
+    whose files have landed (its first action ran). ``materialize``
+    calls this on entry, so a loop holds at most one round's blocks;
+    loops call it once more after their last round."""
+    for item in list(_LAZY_PERSISTED):
+        jrdd, src = item
+        if jrdd.isCheckpointed():
+            src.unpersist(blocking=False)
+            _LAZY_PERSISTED.remove(item)
 
 
 def ensure_scan_parallelism(df: DataFrame) -> DataFrame:

@@ -20,6 +20,9 @@ def env_flag(name: str) -> bool:
     return os.environ.get(name, "").strip().lower() in ("1", "true", "yes")
 
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def _cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -69,5 +72,14 @@ def get_spark(app_name: str = "cassandra-pmem-spark", shuffle_partitions: int | 
         .config("spark.sql.files.maxPartitionBytes", "134217728")
     )
     if not env_flag("SPARK_GRAFT_NO_MASTER"):
-        builder = builder.master(f"local[{cpus}]")
+        # local workers share this host's Python: start them from
+        # worker_daemon, which imports the installed pyspark instead of
+        # Spark's zip/jar archives (~0.2 s off every Python task); the
+        # package root on PYTHONPATH finds it from any working directory
+        # (Spark appends the driver's own PYTHONPATH after it)
+        builder = (
+            builder.master(f"local[{cpus}]")
+            .config("spark.python.daemon.module", "cassandra_pmem_spark.worker_daemon")
+            .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        )
     return builder.getOrCreate()

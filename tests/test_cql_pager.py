@@ -340,3 +340,19 @@ class TestParquetBackedFramePersistGate:
         q = db.pager("SELECT k, c FROM t", page_size=7, state=p.state())
         q.fetch_page()
         assert db._pager_frames[repr(q._st)][1] is f1
+
+    def test_version_tick_evicts_every_frame_of_the_table(self, db):
+        # a write makes every memoized page frame of the table stale, so
+        # re-paging ONE statement evicts and unpins the other's frame too
+        pa = db.pager("SELECT k, c FROM t", page_size=7)
+        pa.fetch_page()
+        pb = db.pager("SELECT k, v FROM t", page_size=7)
+        pb.fetch_page()
+        stale_b = db._pager_frames[repr(pb._st)][1]
+        assert stale_b.storageLevel.useMemory is True
+        db.execute("INSERT INTO t (k, c, v) VALUES (?, ?, ?)", [9, 0, 90])
+        pa2 = db.pager("SELECT k, c FROM t", page_size=7)
+        pa2.fetch_page()
+        assert repr(pb._st) not in db._pager_frames
+        assert stale_b.storageLevel.useMemory is False
+        assert db._pager_frames[repr(pa2._st)][1].storageLevel.useMemory is True

@@ -67,6 +67,29 @@ class TestMaterialize:
         ckdir = spark.sparkContext._jsc.sc().getCheckpointDir()
         assert not ckdir.isEmpty() and str(tmp_path / "ck") in ckdir.get()
 
+    def test_reliable_lazy_checkpoint_releases_its_persist(
+        self, spark, monkeypatch, tmp_path
+    ):
+        # eager=False persists ahead of the checkpoint; once the frame's
+        # first action has written the checkpoint, those blocks must go,
+        # so star-CC rounds leave no persisted RDD behind
+        from cassandra_pmem_spark.pipeline.dedup import connected_components_star
+
+        monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", "1")
+        monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ck"))
+        path = spark.createDataFrame(
+            [(i, i + 1) for i in range(12)], "a long, b long"
+        )
+        vertices = spark.range(13).withColumnRenamed("id", "doc_id")
+
+        def persisted() -> set:
+            return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+        before = persisted()
+        for _ in range(3):
+            labels = connected_components_star(path, vertices)
+            assert {r.comp for r in labels.collect()} == {0}
+            assert persisted() - before == set()
 
     @pytest.mark.parametrize("value", [None, "0"])
     def test_reliable_checkpoint_off_unless_truthy(
